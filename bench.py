@@ -356,24 +356,32 @@ def main() -> None:
     # (AQE off cost llm_minhash_pairs ~2x in the first r18 probe);
     # shuffle partitions deliberately track the core count so waves stay
     # constant across the driver's SPARK_GRAFT_CPUS sweep.
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-    spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
+    scaling_conf = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.sql.shuffle.partitions": str(cpus),
+    }
+    latency_conf = {k: spark.conf.get(k) for k in scaling_conf}
     scaling: dict[str, float] = {}
-    for name, fn in SCALING_QUERIES.items():
-        spark.sparkContext.setJobDescription(name)
-        df = fn(spark, SF_DIR)
-        t: list[float] = []
-        for i in range(4):  # 1 warmup + 3 timed
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            if i > 0:
-                t.append(time.perf_counter() - t0)
-        scaling[name] = round(statistics.median(t), 4)
-    spark.sparkContext.setJobDescription(None)
-    # restore the bench latency profile so the vm_quantum stamp below is
-    # measured under the same conf as every BENCH_r1..r17 record
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for k, v in scaling_conf.items():
+            spark.conf.set(k, v)
+        for name, fn in SCALING_QUERIES.items():
+            spark.sparkContext.setJobDescription(name)
+            df = fn(spark, SF_DIR)
+            t: list[float] = []
+            for i in range(4):  # 1 warmup + 3 timed
+                t0 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                if i > 0:
+                    t.append(time.perf_counter() - t0)
+            scaling[name] = round(statistics.median(t), 4)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+        # restore the bench latency profile so the vm_quantum stamp below
+        # is measured under the same conf as every BENCH_r1..r17 record
+        for k, v in latency_conf.items():
+            spark.conf.set(k, v)
 
     # post-run rescan (ADVICE r10): a foreign JVM that launched AFTER
     # the pre-scan but DURING the timed loop is exactly the overlap the
@@ -403,6 +411,10 @@ def main() -> None:
         "queries": {**prepared, **scaling},
         "queries_cold_plan": cold,
         "sf": float(sf),
+        # cores the session can actually use (local[N] capped by this
+        # process's CPU affinity): bench_guard compares a sample only
+        # with records taken at the same core count
+        "cpus": min(cpus, len(os.sched_getaffinity(0))),
         # same-run VM-state evidence (r11): the zero-work job quantum,
         # measured AFTER the timed loop at the same conf. This VM's
         # quantum drifts 20->65 ms across hours (hypervisor neighbors —

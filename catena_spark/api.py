@@ -15,11 +15,21 @@
 Design stance (SURVEY.md §3.2): the *DataFrame is the iterator*. catena's
 ``Next()`` walks one point at a time because its storage is a local mmap;
 at 100 TB a per-point cursor is the wrong contract, so ``iterator()``
-returns the time-ordered DataFrame of the series (predicate pushdown +
-partition pruning play the extent-index role) and ``seek`` is a filter,
+returns the time-ordered DataFrame of the series and ``seek`` is a filter,
 not a stateful cursor. Durability maps WAL→parquet commit: a batch is
 durable when its files land (object-store rename), replay-on-open is
 free because the files are the state.
+
+What plays catena's extent index is pruning on the ``dt`` partition
+column: ``seek(ts)`` adds ``dt >= <UTC day of ts>``, so a seek and any
+range scan built on it list and open only the days from ``ts`` onward,
+and ``latest()`` aggregates the newest day first. The series equality
+filters push to the Parquet reader, but they skip no row group today: a
+compacted day is one row group (~12k rows at the benchmark's scale)
+whose ``(source, metric)`` min/max span every series. Pruning is sound
+because ``dt`` is monotone in ``ts``: both the writer and the seek bound
+take the day in UTC (a ``CatenaDB`` pins the session zone to UTC, and
+the bound is computed from the instant, whatever the reader's zone).
 
 Value parity with catena's model: points are ``(source str, metric str,
 ts timestamp, value float64)`` — the exact Row shape [R point.go — H,
@@ -32,13 +42,15 @@ import re
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import ensure_runtime_conf
 from .sources import ingest
 
 #: canonical point-row schema (catena Row).
 ROW_DDL = "source string, metric string, ts timestamp, value double"
+POINT_COLS = ("source", "metric", "ts", "value")
 
 
 @dataclass
@@ -62,16 +74,26 @@ class SeriesIterator:
 
     ``df`` is the time-ordered points DataFrame; ``seek``/``after``
     return new (immutable) iterators — cursors are state, filters are
-    plans, and only plans distribute.
+    plans, and only plans distribute. The wrapped frame may also carry
+    the ``dt`` partition column, which ``seek`` bounds; ``df`` hides it.
     """
 
     def __init__(self, df: DataFrame):
-        self.df = df
+        self._df = df
+
+    @property
+    def df(self) -> DataFrame:
+        return self._df.select(*POINT_COLS)
 
     def seek(self, ts) -> "SeriesIterator":
         """Position at the first point with ``ts >= given`` (catena
-        ``Seek``): a pushdown filter, not a scan-and-skip."""
-        return SeriesIterator(self.df.where(F.col("ts") >= ts))
+        ``Seek``): a pushdown filter, not a scan-and-skip. On a
+        dt-partitioned store the same bound prunes the days before
+        ``ts``'s."""
+        cond = F.col("ts") >= ts
+        if "dt" in self._df.columns:
+            cond = cond & (F.col("dt") >= _utc_day(ts))
+        return SeriesIterator(self._df.where(cond))
 
     def first(self):
         """The point under the cursor (catena ``Point()`` after Seek)."""
@@ -83,17 +105,39 @@ class SeriesIterator:
         return self.df.orderBy("ts", "value")
 
 
+def _utc_day(ts) -> Column:
+    """The ``dt`` value (``yyyy-MM-dd``) of instant ``ts`` in UTC, whatever
+    the session zone: day arithmetic on epoch seconds, constant-folded
+    when ``ts`` is a literal, so it reaches the scan as a partition
+    filter."""
+    t = ts if isinstance(ts, Column) else F.lit(ts)
+    days = F.floor(F.unix_seconds(t.cast("timestamp")) / 86400).cast("int")
+    return F.date_from_unix_date(days).cast("string")
+
+
+def _newest_point(df: DataFrame):
+    """``Row(ts, value)`` of the newest point in ``df`` via max_by —
+    partial-aggregate, no global sort; None when ``df`` is empty."""
+    pt = F.struct("ts", "value")
+    return df.agg(F.max_by(pt, pt).alias("p")).collect()[0]["p"]
+
+
 class CatenaDB:
     """A catena DB over dt-partitioned parquet (SURVEY.md §1.2 mapping:
-    partition dir = catena partition, parquet row groups sorted by
-    (source, metric, ts) = extents, partition pruning = extent index)."""
+    partition dir = catena partition, files sorted by (source, metric,
+    ts) = extents, ``dt`` partition pruning = extent index; see the
+    module docstring for what prunes).
+
+    Building or opening one pins the session to the package's runtime
+    conf (``ensure_runtime_conf``), UTC zone included: ``dt`` is the UTC
+    day of ``ts`` on every write, which keeps the seek bound sound."""
 
     def __init__(self, spark: SparkSession, base_dir: str, writable_partitions: int = 2):
         if writable_partitions < 1:
             # parts[-0] would silently mean parts[0] and accept
             # EVERYTHING — the inverse of "zero writable windows"
             raise ValueError("writable_partitions must be >= 1")
-        self.spark = spark
+        self.spark = ensure_runtime_conf(spark)
         self.base_dir = str(base_dir)
         #: newest-N dt windows accept writes (catena: memory partitions);
         #: older windows are rotated out and reject inserts.
@@ -146,7 +190,7 @@ class CatenaDB:
         check accepted it and the re-insert was then rejected,
         non-idempotent). NULL-ts rows have no window: counted as
         rejected_invalid, never written. The batch is persisted once so
-        the two counts and the write see one materialization."""
+        the three counts and the write see one materialization."""
         parts = self._partitions()
         df = ingest.with_dt(rows.select("source", "metric", "ts", "value")).persist()
         try:
@@ -183,13 +227,10 @@ class CatenaDB:
         )
 
     def iterator(self, source: str, metric: str) -> SeriesIterator:
-        """``NewIterator``: equality filters push to the scan; partition
-        pruning (dt) + row-group stats (sorted by source, metric, ts)
-        are the extent index."""
+        """``NewIterator``: equality filters push to the scan; the
+        iterator keeps ``dt`` so ``seek`` prunes whole days."""
         return SeriesIterator(
-            self._all()
-            .where((F.col("source") == source) & (F.col("metric") == metric))
-            .select("source", "metric", "ts", "value")
+            self._all().where((F.col("source") == source) & (F.col("metric") == metric))
         )
 
     def list_series(self) -> DataFrame:
@@ -197,16 +238,17 @@ class CatenaDB:
         return self._all().select("source", "metric").distinct()
 
     def latest(self, source: str, metric: str):
-        """Newest point of a series (B3) via max_by — partial-aggregate,
-        no global sort."""
-        r = (
-            self.iterator(source, metric)
-            .df.agg(
-                F.max_by(F.struct("ts", "value"), F.struct("ts", "value")).alias("p")
-            )
-            .collect()[0]["p"]
-        )
-        return r
+        """Newest point of a series (B3) as ``Row(ts, value)``, or None.
+        Reads the newest day first — dt is monotone in ts, so a point
+        there is the newest of all; only a series absent from that day
+        costs a second, whole-series scan."""
+        series = self.iterator(source, metric)._df
+        parts = self._partitions()
+        if parts:
+            p = _newest_point(series.where(F.col("dt") == parts[-1]))
+            if p is not None:
+                return p
+        return _newest_point(series)
 
     # ------------------------------------------------------------ maintenance
 

@@ -14,9 +14,12 @@ Usage:
 The input may contain arbitrary log noise; the LAST line whose JSON
 parse yields a {"queries": {...}} object is taken as the current run.
 Trailing history is the per-query values from the newest HISTORY
-BENCH_r*.json artifacts in the repo root. The median (not mean) is used
-so one already-regressed round in the window cannot drag the reference
-up and mask a persistent regression — exactly the q3 r7/r8 shape.
+BENCH_r*.json artifacts in the repo root taken at the sample's core
+count (the bench line's ``cpus`` against each record's top-level
+``cpus``; a line without one is compared against every record). The
+median (not mean) is used so one already-regressed round in the window
+cannot drag the reference up and mask a persistent regression — exactly
+the q3 r7/r8 shape.
 Queries with no history (newly added to bench.py) are skipped with a
 note rather than failed. Exit 0 = all queries within budget.
 """
@@ -51,16 +54,8 @@ EXPIRE_MIN_SAMPLES = 3
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def parse_bench_line(
-    path: str,
-) -> tuple[dict[str, float], list[int], dict]:
-    """(queries, contended_with_pids, vm_quantum) from the last bench
-    JSON line.
-
-    A non-empty pid list means bench.py saw other Spark JVMs on the
-    machine when it started (r10: that shape inflated all five queries
-    uniformly 1.4-1.6x) — the sample is unreliable in BOTH directions
-    and must not be adjudicated against the trailing medians at all."""
+def _last_bench_obj(path: str) -> dict:
+    """The last JSON line of ``path`` that carries a ``queries`` object."""
     found = None
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -75,6 +70,20 @@ def parse_bench_line(
                 found = obj
     if found is None:
         sys.exit(f"bench_guard: no bench JSON line with 'queries' found in {path}")
+    return found
+
+
+def parse_bench_line(
+    path: str,
+) -> tuple[dict[str, float], list[int], dict]:
+    """(queries, contended_with_pids, vm_quantum) from the last bench
+    JSON line.
+
+    A non-empty pid list means bench.py saw other Spark JVMs on the
+    machine when it started (r10: that shape inflated all five queries
+    uniformly 1.4-1.6x) — the sample is unreliable in BOTH directions
+    and must not be adjudicated against the trailing medians at all."""
+    found = _last_bench_obj(path)
     return (
         {k: float(v) for k, v in found["queries"].items()},
         list(found.get("contended_with_pids") or []),
@@ -82,12 +91,17 @@ def parse_bench_line(
     )
 
 
-def round_records() -> list[dict[str, float]]:
+def round_records(cpus: int | None = None) -> list[dict[str, float]]:
     """Per-round parsed query timings from ALL BENCH_r*.json artifacts,
     in round order, contention-stamped and unreadable rounds dropped
     (with a note). Callers window this; keeping the full clean list
     means excluding a contended round no longer SHRINKS the window
-    (ADVICE r10) — the window just reaches one round further back."""
+    (ADVICE r10) — the window just reaches one round further back.
+
+    With ``cpus`` set, only records whose top-level ``cpus`` equals it
+    count: a 32-core record is no reference for a 4-core sample (the
+    multi-second scaling probes run ~3-5x slower there with no code
+    change), and a record with no core count is no reference at all."""
 
     def round_no(p: str) -> int:
         m = re.search(r"BENCH_r(\d+)\.json$", p)
@@ -95,10 +109,15 @@ def round_records() -> list[dict[str, float]]:
 
     paths = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")), key=round_no)
     records: list[dict[str, float]] = []
+    other_cpus: list[str] = []
     for p in paths:
         try:
             with open(p, encoding="utf-8") as f:
-                parsed = json.load(f).get("parsed") or {}
+                rec = json.load(f)
+            if cpus is not None and rec.get("cpus") != cpus:
+                other_cpus.append(os.path.basename(p))
+                continue
+            parsed = rec.get("parsed") or {}
             if parsed.get("contended_with_pids"):
                 # a contention-stamped round record is as unreliable as
                 # a reference as it is as a sample — keep it out of the
@@ -113,6 +132,11 @@ def round_records() -> list[dict[str, float]]:
             )
         except (OSError, json.JSONDecodeError, TypeError, ValueError) as e:
             print(f"bench_guard: skipping unreadable {os.path.basename(p)}: {e}")
+    if other_cpus:
+        print(
+            f"bench_guard: {len(other_cpus)} record(s) not taken at cpus={cpus} "
+            f"excluded from history: {', '.join(other_cpus)}"
+        )
     return records
 
 
@@ -297,6 +321,7 @@ def main() -> None:
     if len(sys.argv) != 2:
         sys.exit(__doc__)
     current, contended, quantum = parse_bench_line(sys.argv[1])
+    cpus = _last_bench_obj(sys.argv[1]).get("cpus")
     if quantum:
         q1 = quantum.get("job_1shuffle")
         state = ""
@@ -314,7 +339,7 @@ def main() -> None:
             "and unreliable in both directions; re-run bench on an idle "
             "machine (no pass, no fail, no median adjudication)"
         )
-    records = round_records()
+    records = round_records(cpus)
     failures = check(current, trailing_history(records))
     accepted = load_accepted()
     accepted, expired = expire_accepted(records, accepted)

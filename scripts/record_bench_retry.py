@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Persist BOTH bench samples of a guard-failure retry (ADVICE r10).
 
-check_all.sh's stage 5 re-runs bench once when the per-query guard
+check_all.sh's stage 6 re-runs bench once when the per-query guard
 fails, to separate one-off VM drift from a persistent regression. The
 retry policy is honest only if the FAILED first sample stays on the
 record — otherwise the gate's history shows only retries that passed

@@ -171,3 +171,161 @@ def test_env_int_tolerates_empty_and_names_bad_values(monkeypatch):
     monkeypatch.setenv("CATENA_X_TEST", "seven")
     with pytest.raises(ValueError, match="CATENA_X_TEST"):
         env_int("CATENA_X_TEST", 42)
+
+
+# ------------------------------------------------------------ dt pruning
+
+_DAYS = 6
+
+
+def _day_edges(spark):
+    """Series a/b at 00:00:00, 12:00 and 23:59:59.999999 of each day;
+    b stops after day 2 (absent from the newest partitions)."""
+    base = datetime.datetime(2026, 1, 10)
+    edges = (
+        datetime.timedelta(0),
+        datetime.timedelta(hours=12),
+        datetime.timedelta(days=1, microseconds=-1),
+    )
+    data = [
+        (src, "util", base + datetime.timedelta(days=d) + e, float(100 * d + i))
+        for src, n_days in (("a", _DAYS), ("b", 3))
+        for d in range(n_days)
+        for i, e in enumerate(edges)
+    ]
+    return spark.createDataFrame(
+        data, "source string, metric string, ts timestamp, value double"
+    )
+
+
+@pytest.fixture()
+def days_db(spark, tmp_path):
+    db = CatenaDB.create(spark, str(tmp_path / "days"), writable_partitions=_DAYS)
+    assert db.insert_rows(_day_edges(spark)).inserted == 3 * (_DAYS + 3)
+    assert len(db._partitions()) == _DAYS
+    return db
+
+
+def _unpruned(db, source, ts):
+    """Reference: the series filtered by ``ts >=`` alone, no dt bound."""
+    return (
+        db._all()
+        .where((F.col("source") == source) & (F.col("metric") == "util"))
+        .where(F.col("ts") >= ts)
+        .select("source", "metric", "ts", "value")
+    )
+
+
+def _range_agg(df, hi):
+    return (
+        df.where(F.col("ts") < hi)
+        .agg(F.count(F.lit(1)).alias("n"), F.min("value"), F.max("value"))
+        .collect()[0]
+    )
+
+
+def _files_read(df) -> int:
+    """Sum of the executed plan's file-scan "number of files read"
+    metric (call after ``df`` was collected)."""
+
+    def scans(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from scans(p.executedPlan())
+            return
+        if name.endswith("QueryStageExec"):
+            yield from scans(p.plan())
+            return
+        if name == "FileSourceScanExec":
+            yield p
+        kids = p.children()
+        for i in range(kids.length()):
+            yield from scans(kids.apply(i))
+
+    plan = df._jdf.queryExecution().executedPlan()
+    return sum(s.metrics().apply("numFiles").value() for s in scans(plan))
+
+
+def _files_from(db, day: str) -> int:
+    import pathlib
+
+    return sum(
+        len(list(p.glob("*.parquet")))
+        for p in pathlib.Path(db.base_dir).glob("dt=*")
+        if p.name.split("=", 1)[1] >= day
+    )
+
+
+def test_seek_and_range_scan_read_only_days_from_seek(spark, days_db):
+    lo = datetime.datetime(2026, 1, 13, 12)
+    it = days_db.iterator("a", "util").seek(lo)
+    first = it.df.orderBy("ts", "value").limit(1)
+    assert first.collect()[0]["ts"] == lo
+    rng = it.df.where(F.col("ts") < datetime.datetime(2026, 1, 15)).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    assert rng.collect()[0]["n"] == 5
+    want = _files_from(days_db, "2026-01-13")
+    assert 0 < want < _files_from(days_db, "2026-01-10")
+    assert _files_read(first) == want
+    assert _files_read(rng) == want
+
+
+def test_latest_falls_back_when_series_missing_from_newest_day(spark, days_db):
+    assert days_db.latest("a", "util") == (
+        datetime.datetime(2026, 1, 15, 23, 59, 59, 999999), 502.0
+    )
+    # b has no point in dt=2026-01-15: the whole-series scan answers
+    assert days_db.latest("b", "util") == (
+        datetime.datetime(2026, 1, 12, 23, 59, 59, 999999), 202.0
+    )
+    assert days_db.latest("c", "util") is None
+
+
+def test_latest_on_empty_db_is_none(spark, tmp_path):
+    db = CatenaDB.create(spark, str(tmp_path / "empty"))
+    assert db.latest("cpu0", "util") is None
+
+
+def test_iterator_frames_expose_point_columns_only(spark, days_db):
+    cols = ["source", "metric", "ts", "value"]
+    it = days_db.iterator("a", "util")
+    assert it.df.columns == cols
+    assert it.seek(datetime.datetime(2026, 1, 12)).df.columns == cols
+    assert it.seek(datetime.datetime(2026, 1, 12)).points().columns == cols
+    assert list(it.first().asDict()) == cols
+
+
+@pytest.mark.parametrize("zone", ["UTC", "+14:00", "-11:00"])
+def test_pruned_reads_match_unpruned_in_any_zone(spark, days_db, zone):
+    """Seeks at a day's first and last microsecond (as datetimes and as
+    strings) give the unpruned answers; dt is the UTC day of ts (the
+    writer's zone is pinned), and a reader session in any other zone
+    must get the same answers."""
+    key = "spark.sql.session.timeZone"
+    seeks = [
+        datetime.datetime(2026, 1, 12),
+        datetime.datetime(2026, 1, 12, 12),
+        datetime.datetime(2026, 1, 12, 23, 59, 59, 999999),
+        "2026-01-12 00:00:00",
+        "2026-01-13 23:59:59.999999",
+    ]
+    hi = datetime.datetime(2026, 1, 14, 12)
+    try:
+        spark.conf.set(key, zone)
+        for src in ("a", "b"):
+            for ts in seeks:
+                it = days_db.iterator(src, "util").seek(ts)
+                ref = _unpruned(days_db, src, ts)
+                want = ref.orderBy("ts", "value").limit(1).collect()
+                assert it.first() == (want[0] if want else None), (src, ts)
+                assert _range_agg(it.df, hi) == _range_agg(ref, hi), (src, ts)
+                assert sorted(it.points().collect()) == sorted(ref.collect())
+            full = days_db.iterator(src, "util").df
+            newest = full.orderBy(F.desc("ts"), F.desc("value")).first()
+            assert days_db.latest(src, "util") == (newest["ts"], newest["value"])
+        # opening the store in a foreign zone pins the writer zone to UTC
+        CatenaDB.open(spark, days_db.base_dir)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, "UTC")

@@ -200,6 +200,49 @@ def test_window_reaches_past_contended_rounds(tmp_path, monkeypatch):
     assert hist == {"q1": [0.041, 0.042, 0.043, 0.044, 0.045]}
 
 
+def test_history_is_filtered_to_the_sample_core_count(tmp_path, monkeypatch, capsys):
+    """A sample is compared only with records taken at its own core
+    count: the scaling probes run ~3-5x slower on 4 cores than on 32
+    with no code change, so 32-core history must not judge a 4-core
+    sample — nor 4-core history a 32-core one."""
+    import json
+
+    import pytest
+
+    for rn, cpus, v in [
+        (1, 32, 5.9), (2, 32, 6.0), (3, None, 6.0), (4, 4, 18.9),
+        (5, 32, 6.1), (6, 4, 19.0), (7, 8, 9.0),
+    ]:
+        rec = {"parsed": {"queries": {"scaling_q": v}}}
+        if cpus is not None:
+            rec["cpus"] = cpus
+        (tmp_path / f"BENCH_r{rn:02d}.json").write_text(json.dumps(rec))
+    monkeypatch.setattr(bench_guard, "REPO", str(tmp_path))
+    assert bench_guard.round_records(4) == [{"scaling_q": 18.9}, {"scaling_q": 19.0}]
+    assert bench_guard.round_records(32) == [{"scaling_q": v} for v in (5.9, 6.0, 6.1)]
+    assert len(bench_guard.round_records()) == 7  # no core count: no filter
+
+    sample = tmp_path / "bench_out.txt"
+    monkeypatch.setattr(bench_guard.sys, "argv", ["bench_guard", str(sample)])
+    monkeypatch.delenv("BENCH_GUARD_ACCEPT_RATCHET", raising=False)
+    # a 4-core sample within budget of the 4-core records passes ...
+    sample.write_text(json.dumps({"queries": {"scaling_q": 19.5}, "cpus": 4}) + "\n")
+    bench_guard.main()
+    assert "excluded from history" in capsys.readouterr().out
+    # ... and still fails when it regresses against them
+    sample.write_text(json.dumps({"queries": {"scaling_q": 27.0}, "cpus": 4}) + "\n")
+    with pytest.raises(SystemExit):
+        bench_guard.main()
+    # the same 19.5 s at 32 cores is a 3x regression
+    sample.write_text(json.dumps({"queries": {"scaling_q": 19.5}, "cpus": 32}) + "\n")
+    with pytest.raises(SystemExit):
+        bench_guard.main()
+    # a core count with no history is skipped, not failed
+    sample.write_text(json.dumps({"queries": {"scaling_q": 19.5}, "cpus": 16}) + "\n")
+    bench_guard.main()
+    assert "no trailing history" in capsys.readouterr().out
+
+
 def _records(vals):
     return [{"q1": v} for v in vals]
 

@@ -113,11 +113,12 @@ def _docs_norm(
 
     ``spread=False`` opts a consumer out of the r17 unsplittable-input
     fan-out (VERDICT r17 item 1): an r18 interleaved same-session A/B
-    (scripts/r18_ab_spread.py) showed the extra round-robin exchange
-    COSTS more than the parallelism buys when the per-row kernel is
-    trivial — llm_exact_dedup 0.19 s OFF vs 0.48 s ON, llm_bm25_topk
-    0.68 vs 1.17, llm_dedup_remap 0.35 vs 0.64, llm_inverted_index
-    0.58 vs 0.83, llm_tfidf_top_terms 1.13 vs 1.43 — while the heavy
+    (``git show be25466:scripts/r18_ab_spread.py``) showed the extra
+    round-robin exchange COSTS more than the parallelism buys when the
+    per-row kernel is trivial — llm_exact_dedup 0.19 s OFF vs 0.48 s
+    ON, llm_bm25_topk 0.68 vs 1.17, llm_dedup_remap 0.35 vs 0.64,
+    llm_inverted_index 0.58 vs 0.83, llm_tfidf_top_terms 1.13 vs 1.43
+    — while the heavy
     per-row kernels keep their 3-4x wins (llm_doc_fingerprint 2.59 s
     OFF vs 0.60 ON, llm_winnowing_fingerprint 4.11 vs 1.23, same
     session). At 100 TB the spread is a structural no-op either way

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..parity import (
-    det_double,
     duck_det_double,
     duck_usum,
     rsum,
@@ -33,6 +32,14 @@ from ..parity import (
 )
 from ..registry import query
 from ..twophase import grouped_positions
+
+#: Money expressions summed by a Spark query AND its oracle — one SQL
+#: text each, passed to usum/usum_long and duck_usum alike (parity
+#: rule 3). The suffix is the decimal scale the value is exact at.
+REV4 = "l_extendedprice * (1 - l_discount)"
+DISC_REV4 = "l_extendedprice * l_discount"
+PROFIT4 = f"{REV4} - p_retailprice * l_quantity"
+PROMO_REV4 = f"CASE WHEN p_type LIKE 'PROMO%' THEN {REV4} ELSE 0 END"
 
 
 # ---------------------------------------------------------------- A6: scan
@@ -103,12 +110,15 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # limb kernels used to be BUILT as Column trees — ~140 py4j
     # round-trips each, ~0.65 s of the ~1.4 s cold-plan latency was pure
     # driver-side Column construction (decomposition in
-    # OPTIMIZATION_r18.md). The same expressions as ONE-string SQL via
-    # parity.spark_det_double parse server-side in milliseconds; the
-    # analyzed tree — and therefore the optimized plan, the physical
-    # plan, and every output bit — is unchanged (bit-equality of the
-    # two kernel forms is pinned across the full decimal(38,0) range by
-    # test_det_double_bit_identical_across_engines).
+    # OPTIMIZATION_r18.md). As SQL text (parity.spark_det_double) they
+    # parse server-side in milliseconds. The plans are not the Column
+    # form's: Spark 4.1 rewrites the text's BETWEEN through a common
+    # expression, so the analyzed and optimized plans differ and the
+    # optimized plan gains a root Project above the Aggregate. The
+    # aggregate functions and every output row are unchanged, and the
+    # kernel is pinned bit-identical to DuckDB and a pure-Python
+    # reference across the full decimal(38,0) range by
+    # test_det_double_bit_identical_across_engines.
     qi = "CAST(l_quantity AS BIGINT)"
     pc = "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
     dc = "CAST(round(l_discount * 100, 0) AS BIGINT)"
@@ -205,7 +215,7 @@ def join_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            usum(F.col("o_totalprice"), 2).alias("sum_total"),
+            usum("o_totalprice", 2).alias("sum_total"),
         )
     )
 
@@ -238,9 +248,7 @@ def join_left_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("l_orderkey").alias("n_big_items"),
             # usum_long: <= 7 lineitems per order at ANY scale factor
-            F.coalesce(usum_long(F.col("l_extendedprice"), 2), F.lit(0.0)).alias(
-                "sum_big"
-            ),
+            F.coalesce(usum_long("l_extendedprice", 2), F.lit(0.0)).alias("sum_big"),
         )
     )
 
@@ -375,7 +383,7 @@ def agg_rollup_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     return joined.rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_cust"),
-        usum(F.col("c_acctbal"), 2).alias("sum_bal"),
+        usum("c_acctbal", 2).alias("sum_bal"),
     )
 
 
@@ -470,7 +478,7 @@ def win_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "D12",
     oracle=f"""
     SELECT o.o_orderkey,
-           {duck_usum("l.l_extendedprice * (1 - l.l_discount)", 4)} AS revenue,
+           {duck_usum(REV4, 4)} AS revenue,
            strftime(CAST(o.o_orderdate AS TIMESTAMP), '%Y-%m-%d') AS order_day
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -501,9 +509,7 @@ def topk_revenue_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
             # usum_long: <= 7 lineitems per order at ANY scale factor
-            usum_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            )
+            usum_long(REV4, 4).alias("revenue")
         )
         .select(
             "o_orderkey",
@@ -834,7 +840,7 @@ def agg_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join_q5_local_supplier",
     "D3",
     oracle=f"""
-    SELECT n_name, {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+    SELECT n_name, {duck_usum(REV4, 4)} AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -881,9 +887,7 @@ def join_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .where(F.col("r_name") == "ASIA")
     )
-    return j.groupBy("n_name").agg(
-        usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
-    )
+    return j.groupBy("n_name").agg(usum(REV4, 4).alias("revenue"))
 
 
 # ---------------------------------------------------------------- D19: map/struct
@@ -1055,7 +1059,7 @@ def win_ntile_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     "D3",
     oracle=f"""
     SELECT s_name, count(*) AS n_items,
-           {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+           {duck_usum(REV4, 4)} AS revenue
     FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
     GROUP BY s_name
     """,
@@ -1087,9 +1091,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_name")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            ),
+            usum(REV4, 4).alias("revenue"),
         )
     )
 
@@ -1163,7 +1165,7 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n1.n_name AS cust_nation, n2.n_name AS supp_nation,
            count(*) AS n_items,
-           {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+           {duck_usum(REV4, 4)} AS revenue
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey
@@ -1219,9 +1221,7 @@ def join_q7_nation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return j.groupBy("cust_nation", "supp_nation").agg(
         F.count(F.lit(1)).alias("n_items"),
-        usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-            "revenue"
-        ),
+        usum(REV4, 4).alias("revenue"),
     )
 
 
@@ -1232,7 +1232,7 @@ def join_q7_nation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "D2",
     oracle=f"""
     SELECT count(*) AS n,
-           {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+           {duck_usum(REV4, 4)} AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 1 AND 20)
@@ -1265,9 +1265,7 @@ def join_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            ),
+            usum(REV4, 4).alias("revenue"),
         )
     )
 
@@ -1529,11 +1527,12 @@ def agg_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtract, IEEE sqrt, divide — no round, no engine internals.
 
     r6 (ADVICE r5 item 2): the moment->double casts go through
-    det_double/duck_det_double because the squared price moments reach
-    1e23–1e24 at sf0.1 — far past 2^63, where DuckDB's double-rounded
-    HUGEINT cast and Spark's correctly rounded decimal cast can differ
-    by 1 ulp near a rounding boundary. The limb-split conversion is
-    bit-identical in both engines at any magnitude.
+    spark_det_double/duck_det_double because the squared price moments
+    reach 1e23–1e24 at sf0.1 — far past 2^63, where DuckDB's
+    double-rounded HUGEINT cast and Spark's correctly rounded decimal
+    cast can differ by 1 ulp near a rounding boundary. The limb-split
+    conversion is bit-identical in both engines at any magnitude; the
+    Spark side applies it in one post-aggregation selectExpr.
 
     Scale: the moment sums are plain partial-aggregatable SUMs — same
     single-pass shuffle shape as the built-in aggregates they replace.
@@ -1565,29 +1564,17 @@ def agg_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((pc * pc).cast(dec)).alias("spc2"),
         F.sum((qi * pc).cast(dec)).alias("sqp"),
     )
-    n, sq, sq2 = F.col("n"), F.col("sq"), F.col("sq2")
-    sdc, sdc2 = F.col("sdc"), F.col("sdc2")
-    spc, spc2, sqp = F.col("spc"), F.col("spc2"), F.col("sqp")
-    varq = det_double(n * sq2 - sq * sq) / det_double(n * (n - 1))
-    return m.select(
+    dd = spark_det_double
+    varq = f"{dd('n * sq2 - sq * sq')} / {dd('n * (n - 1)')}"
+    cov = dd("n * sqp - sq * spc")
+    return m.selectExpr(
         "l_returnflag",
-        F.sqrt(varq).alias("sd_qty"),
-        varq.alias("var_qty"),
-        F.sqrt(
-            det_double(n * sdc2 - sdc * sdc) / det_double(n * n * 10000)
-        ).alias("sdp_disc"),
-        (
-            det_double(n * sqp - sq * spc)
-            / (
-                F.sqrt(det_double(n * sq2 - sq * sq))
-                * F.sqrt(det_double(n * spc2 - spc * spc))
-            )
-        ).alias("corr_qty_price"),
-        (
-            det_double(n * sqp - sq * spc)
-            / det_double(n * (n - 1))
-            / F.lit(100.0)
-        ).alias("covar_qty_price"),
+        f"sqrt({varq}) AS sd_qty",
+        f"{varq} AS var_qty",
+        f"sqrt({dd('n * sdc2 - sdc * sdc')} / {dd('n * n * 10000')}) AS sdp_disc",
+        f"{cov} / (sqrt({dd('n * sq2 - sq * sq')})"
+        f" * sqrt({dd('n * spc2 - spc * spc')})) AS corr_qty_price",
+        f"{cov} / {dd('n * (n - 1)')} / 100.0D AS covar_qty_price",
     )
 
 
@@ -1642,7 +1629,7 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "D3",
     oracle=f"""
     SELECT c_custkey, c_name, n_name,
-           {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
+           {duck_usum(REV4, 4)} AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -1680,9 +1667,7 @@ def join_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             # usum_long: returned items per customer-year is ~constant
             # per the schema (orders/customer and items/order are both
             # bounded), so the 1e-4-unit sum stays ~1e11 at any SF
-            usum_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            )
+            usum_long(REV4, 4).alias("revenue")
         )
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -1736,11 +1721,8 @@ def agg_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH agg AS (
         SELECT
-            {duck_usum(
-                "CASE WHEN p_type LIKE 'PROMO%' "
-                "THEN l_extendedprice * (1 - l_discount) ELSE 0 END", 4
-            )} AS promo_rev,
-            {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS total_rev
+            {duck_usum(PROMO_REV4, 4)} AS promo_rev,
+            {duck_usum(REV4, 4)} AS total_rev
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
           AND l_shipdate <  TIMESTAMP '1997-07-01 00:00:00')
@@ -1764,11 +1746,9 @@ def join_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1997-06-01") & (F.col("l_shipdate") < "1997-07-01")
     )
     p = tables.load(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
     out = li.join(p, li.l_partkey == p.p_partkey).agg(
-        usum(promo, 4).alias("promo_rev"),
-        usum(rev, 4).alias("total_rev"),
+        usum(PROMO_REV4, 4).alias("promo_rev"),
+        usum(REV4, 4).alias("total_rev"),
     )
     return out.select(
         "promo_rev",
@@ -1882,7 +1862,7 @@ def subq_q22_idle_wealthy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).cast("long").alias("numcust"),
-            usum(F.col("c_acctbal"), 2).alias("totacctbal"),
+            usum("c_acctbal", 2).alias("totacctbal"),
         )
     )
 
@@ -1895,9 +1875,7 @@ def subq_q22_idle_wealthy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n_name AS nation,
            CAST(year(o_orderdate) AS BIGINT) AS o_year,
-           {duck_usum(
-               "l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity", 4
-           )} AS profit
+           {duck_usum(PROFIT4, 4)} AS profit
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
     JOIN part     ON l_partkey = p_partkey
@@ -1924,9 +1902,6 @@ def join_q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = tables.load(spark, sf_dir, "part").where(F.col("p_name").like("%gear%"))
     s = tables.load(spark, sf_dir, "supplier")
     n = tables.load(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -1936,7 +1911,7 @@ def join_q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
-        .agg(usum(profit, 4).alias("profit"))
+        .agg(usum(PROFIT4, 4).alias("profit"))
     )
 
 
@@ -1951,10 +1926,9 @@ def join_q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (
         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
                {duck_usum(
-                   "CASE WHEN sn.n_name = 'NATION_5' "
-                   "THEN l_extendedprice * (1 - l_discount) ELSE 0 END", 4
+                   f"CASE WHEN sn.n_name = 'NATION_5' THEN {REV4} ELSE 0 END", 4
                )} AS nation_rev,
-               {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS total_rev
+               {duck_usum(REV4, 4)} AS total_rev
         FROM lineitem
         JOIN orders    ON l_orderkey = o_orderkey
         JOIN customer  ON o_custkey = c_custkey
@@ -1989,7 +1963,6 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = tables.load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("sn_name")
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     # r18 (guide §3.2 — shrink before the big join): the ASIA-region
     # customer filter is the query's only selective predicate (~1 of 5
     # regions), but it used to apply AFTER lineitem⋈orders, so the
@@ -2021,9 +1994,10 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
-            usum(F.when(F.col("sn_name") == "NATION_5", rev).otherwise(0.0), 4)
-                .alias("nation_rev"),
-            usum(rev, 4).alias("total_rev"),
+            usum(
+                f"CASE WHEN sn_name = 'NATION_5' THEN {REV4} ELSE 0 END", 4
+            ).alias("nation_rev"),
+            usum(REV4, 4).alias("total_rev"),
         )
     )
     return base.select(
@@ -2042,7 +2016,7 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH rev AS (
         SELECT l_suppkey,
-               {duck_usum("l_extendedprice * (1 - l_discount)", 4)} AS total_rev
+               {duck_usum(REV4, 4)} AS total_rev
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
           AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
@@ -2066,11 +2040,7 @@ def subq_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
     s = tables.load(spark, sf_dir, "supplier")
-    rev = li.groupBy("l_suppkey").agg(
-        usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-            "total_rev"
-        )
-    )
+    rev = li.groupBy("l_suppkey").agg(usum(REV4, 4).alias("total_rev"))
     mx = rev.agg(F.max("total_rev").alias("mx"))
     return (
         rev.join(F.broadcast(mx))
@@ -2086,7 +2056,7 @@ def subq_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_q6_forecast_revenue",
     "D7",
     oracle=f"""
-    SELECT {duck_usum("l_extendedprice * l_discount", 4)} AS revenue,
+    SELECT {duck_usum(DISC_REV4, 4)} AS revenue,
            CAST(count(*) AS BIGINT) AS n_items
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -2112,7 +2082,7 @@ def agg_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.05, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        usum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"),
+        usum(DISC_REV4, 4).alias("revenue"),
         F.count(F.lit(1)).cast("long").alias("n_items"),
     )
 

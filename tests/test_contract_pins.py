@@ -26,6 +26,7 @@ premise, new test), instead of drifting in as a "speedup".
 
 from __future__ import annotations
 
+import importlib.util
 import inspect
 
 from catena_spark.operators import llm
@@ -55,9 +56,11 @@ def test_simhash_near_pairs_semantics_pinned():
 def test_banding_growth_guard_premise_intact():
     """The sweep_scale growth guard still compares the banded path
     against the exact baseline — the premise pin #1 protects."""
-    text = open("scripts/sweep_scale.py").read()
+    spec = importlib.util.spec_from_file_location(
+        "sweep_scale", "scripts/sweep_scale.py"
+    )
+    sweep_scale = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sweep_scale)  # main() sits behind __main__
     assert ("llm_ann_lsh", "llm_embedding_near_dup") in [
-        (a, b) for a, b, _ in eval(
-            text.split("BANDING_SPEEDUP = ")[1].split("]")[0] + "]"
-        )
+        (a, b) for a, b, _ in sweep_scale.BANDING_SPEEDUP
     ]

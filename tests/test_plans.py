@@ -181,11 +181,11 @@ def test_ewma_single_exchange_partition_fold(spark):
 
 
 def test_q3_det_double_fast_path_survives_optimizer(spark):
-    """The r9 sub-2^53 fast path in parity.det_double (VERDICT r7/r8
-    item 1) must stay on q3's final-cast hot path: Catalyst renders it
-    as a CASE bounded by +/-9007199254740992 around the native cast,
-    with the string-limb kernel (lpad) demoted to the >2^53 escape
-    branch. If a refactor drops the fast path, q3 regresses 42->74 ms
+    """The r9 sub-2^53 fast path in parity.spark_det_double (VERDICT
+    r7/r8 item 1), reached through usum_long, must stay on q3's
+    final-cast hot path: Catalyst renders it as a CASE bounded by
+    +/-9007199254740992 around the native cast, with the string-limb
+    kernel (lpad) demoted to the >2^53 escape branch. If a refactor drops the fast path, q3 regresses 42->74 ms
     (A/B-proven r7) — pin the plan shape, not just the timing."""
     df = rel.topk_revenue_q3(spark, SF_SMALL)
     plan = formatted_plan(df)
